@@ -435,6 +435,14 @@ LIMIT 10
 
 def _q_events_hourly(spark, sf_dir):
     _prep(spark)
+    # the hour buckets and their rendered strings match the oracle's
+    # naive DuckDB timestamps only in UTC
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz != "UTC":
+        raise RuntimeError(
+            "events_hourly needs spark.sql.session.timeZone=UTC after _prep; "
+            f"the session reports {tz!r}"
+        )
     ev = _t(spark, sf_dir, "events")
     # group on the raw truncated TIMESTAMP and format after the
     # aggregate (r12, guide §2.3): date_format on hour-truncated

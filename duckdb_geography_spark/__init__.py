@@ -16,7 +16,11 @@ Design (SURVEY.md):
 
 from __future__ import annotations
 
+from . import _zipguard
+
 __version__ = "0.1.0"
+
+_zipguard.install()
 
 
 def __getattr__(name):

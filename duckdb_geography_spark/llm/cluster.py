@@ -152,7 +152,9 @@ def _lloyd_partials_kernel(cents: np.ndarray, quant: int = _Q):
       so per-task partials summed on the driver equal the one global
       aggregate the JVM form computed;
     - NULL vectors get no assignment (the old NULL-cluster rows were
-      dropped before the aggregate)."""
+      dropped before the aggregate), and neither do vectors with a
+      NaN, +-inf or NULL element: their norm is NaN or inf, and
+      ``floor(nan)`` cast to int64 would add INT64_MIN to the sums."""
     C = np.ascontiguousarray(cents, dtype=np.float64)
     k, dim = C.shape
     fquant = float(quant)
@@ -168,6 +170,9 @@ def _lloyd_partials_kernel(cents: np.ndarray, quant: int = _Q):
             if not mask.any():
                 continue
             X = np.stack(s[mask].to_numpy()).astype(np.float64)
+            X = X[np.isfinite(X).all(axis=1)]
+            if not len(X):
+                continue
             assign = np.argmax(X @ C.T, axis=1)
             norm = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
             Q = np.zeros(X.shape, dtype=np.int64)

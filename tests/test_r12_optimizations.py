@@ -93,6 +93,32 @@ def test_lloyd_partials_kernel_matches_jvm_aggregate(spark):
         assert (got[c] == ref[c]).all(), c
 
 
+def test_lloyd_partials_kernel_ignores_dirty_vectors():
+    """A vector with a NaN, inf or NULL element gets no assignment and
+    adds nothing to the cluster sums: mixing such rows (and a NULL
+    vector) into clean rows leaves the clean rows' sums unchanged."""
+    import numpy as np
+    import pyarrow as pa
+
+    from duckdb_geography_spark.llm import cluster as CL
+
+    rng = np.random.default_rng(5)
+    clean = rng.normal(size=(40, 8)).tolist()
+    cents = CL._init_centroids(np.asarray(clean[:16]), 3, 11)
+    nan_row, inf_row, null_row = clean[0][:], clean[1][:], clean[2][:]
+    nan_row[3], inf_row[5], null_row[1] = float("nan"), float("inf"), None
+    dirty = clean[:10] + [nan_row, None] + clean[10:25] + [inf_row, null_row] + clean[25:]
+
+    def sums(rows):
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(rows, type=pa.list_(pa.float64()))], ["__v"]
+        )
+        out = next(CL._lloyd_partials_kernel(cents)([batch])).to_pydict()
+        return dict(zip(out["__c"], out["__sums"]))
+
+    assert sums(dirty) == sums(clean)
+
+
 def test_char_entropy_features_hook_identical(spark, messy_docs):
     """char_entropy_stats(features=...) must equal the join of the
     caller's own projection with the featureless result — the r12
@@ -192,3 +218,32 @@ def test_group_then_format_rewrites_identical(spark):
         .orderBy("hour", "event_type")
     )
     assert got_eh == ref_eh
+
+
+def test_events_hourly_pins_utc_for_non_utc_session(spark, monkeypatch):
+    """events_hourly groups before it formats, which matches the
+    oracle only in UTC: a session opened in another zone still gets
+    the oracle's rows through _prep, and a session whose zone is not
+    UTC after _prep fails loudly instead of returning shifted hours."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    conf = "spark.sql.session.timeZone"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "Asia/Kolkata")
+        got = _rows(e.queries()["events_hourly"](spark, SF_DIR))
+        assert spark.conf.get(conf) == "UTC"
+        con = duckdb.connect()
+        con.sql(f"CREATE VIEW events AS FROM '{SF_DIR}/events.parquet'")
+        want = sorted(con.sql(e.oracle_sql_builders()["events_hourly"]()).fetchall())
+        con.close()
+        assert got == want
+
+        spark.conf.set(conf, "Asia/Kolkata")
+        monkeypatch.setattr(e, "_prep", lambda spark: None)
+        with pytest.raises(RuntimeError, match="timeZone=UTC"):
+            e.queries()["events_hourly"](spark, SF_DIR)
+    finally:
+        spark.conf.set(conf, before)
