@@ -171,8 +171,6 @@ def _lloyd_partials_kernel(cents: np.ndarray, quant: int = _Q):
                 continue
             X = np.stack(s[mask].to_numpy()).astype(np.float64)
             X = X[np.isfinite(X).all(axis=1)]
-            if not len(X):
-                continue
             assign = np.argmax(X @ C.T, axis=1)
             norm = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
             Q = np.zeros(X.shape, dtype=np.int64)
