@@ -22,18 +22,6 @@ def _write_zip(path, modules):
     os.replace(tmp, path)
 
 
-def _count_directory_reads(monkeypatch):
-    calls = []
-    read = zipimport._read_directory
-
-    def counting(archive):
-        calls.append(archive)
-        return read(archive)
-
-    monkeypatch.setattr(zipimport, "_read_directory", counting)
-    return calls
-
-
 def test_guard_skips_unchanged_archive_and_rereads_changed(tmp_path, monkeypatch):
     archive = str(tmp_path / "zg_pkg.zip")
     _write_zip(archive, ["zg_mod_a"])
@@ -52,7 +40,11 @@ def test_guard_skips_unchanged_archive_and_rereads_changed(tmp_path, monkeypatch
     _zipguard.install()
     assert zipimport.zipimporter.invalidate_caches is _zipguard.invalidate_caches
 
-    calls = _count_directory_reads(monkeypatch)
+    calls = []
+    read = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda a: calls.append(a) or read(a)
+    )
     importlib.invalidate_caches()
     assert calls == []
 
